@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from claimskg_generator_spark.constants.namespaces import NS
 from claimskg_generator_spark.functions.cleaning import PY_STRIP_REGEX
+from claimskg_generator_spark.functions.frames import CacheFills
 from claimskg_generator_spark.functions.textmatch import PhraseMatcher
 from claimskg_generator_spark.functions.udfs import make_keyword_match_udf
 from claimskg_generator_spark.functions.uuid5 import uuid5_url_col
@@ -75,10 +76,25 @@ def exploded_keywords(claims: DataFrame, model_uri: str) -> DataFrame:
     )
 
 
+def keyword_winners(ex: DataFrame) -> DataFrame:
+    """(w_kw_uri, win_ord): per keyword, the first row (in ``ord`` order)
+    whose keyword-mention list has a containment match — the
+    first-writer-wins memo as a slim aggregate.  Shared by the keyword
+    families and the logical views, so a cached copy serves both."""
+    return (
+        ex.groupBy("kw_uri")
+        .agg(F.min(F.when(F.size("matched") > 0, F.col("ord")))
+             .alias("win_ord"))
+        .filter(F.col("win_ord").isNotNull())
+        .select(F.col("kw_uri").alias("w_kw_uri"), "win_ord")
+    )
+
+
 def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
                                      matchers: Dict[str, PhraseMatcher],
                                      threshold: float,
-                                     ex: DataFrame = None):
+                                     ex: DataFrame = None,
+                                     fills: CacheFills = None):
     """Returns (non-mention keyword triples, raw winner mention rows).
 
     The raw mention rows (attach = keyword URI) are returned unminted so
@@ -87,11 +103,19 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
 
     ``ex``: pre-materialized exploded_keywords frame — pass it when the
     same run also builds views/statistics so the tag explode + containment
-    filter is computed ONCE per run, not once per consumer."""
+    filter is computed ONCE per run, not once per consumer.
+
+    ``fills``: the run's CacheFills, which caches — and, when enabled,
+    fills — the frames shared here (distinct keywords with their
+    thesaurus matches, per-keyword winners) so the query consuming the
+    returned frames only reads loaded caches; default: lazy caches, no
+    action."""
+    if fills is None:
+        fills = CacheFills(False)
     # consumed by the edge projection, the winner aggregate and the winner
     # join — cache so the tag explode + containment filter runs once
     if ex is None:
-        ex = exploded_keywords(claims, model_uri).cache()
+        ex = fills(exploded_keywords(claims, model_uri))
 
     # (cw, schema:keywords, kw) for every occurrence (:410)
     edges = ex.select(
@@ -104,11 +128,10 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
     # distinct keywords: node triples + broadcast thesaurus matching (J3).
     # Cached: tiny (distinct keywords), consumed by three plan branches.
     kw_match = make_keyword_match_udf(matchers)
-    distinct_kw = (
+    distinct_kw = fills(
         ex.select("keyword", "kw_uri")
         .dropDuplicates(["kw_uri"])
         .withColumn("cm", kw_match(F.col("keyword")))
-        .cache()
     )
     node_triples = emit(
         distinct_kw,
@@ -131,16 +154,9 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
     )
 
     # first-writer-wins winner per keyword (slim aggregate, broadcast back)
-    per_row = ex.withColumn("has_match", F.size("matched") > 0)
-    winners = (
-        per_row.groupBy("kw_uri")
-        .agg(F.min(F.when(F.col("has_match"), F.col("ord"))).alias("win_ord"))
-        .filter(F.col("win_ord").isNotNull())
-        .select(F.col("kw_uri").alias("w_kw_uri"), "win_ord")
-        .cache()
-    )
+    winners = fills(keyword_winners(ex))
     win_rows = (
-        per_row.join(
+        ex.join(
             F.broadcast(winners),
             (F.col("kw_uri") == F.col("w_kw_uri")) & (F.col("ord") == F.col("win_ord")),
         )

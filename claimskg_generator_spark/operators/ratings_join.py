@@ -16,6 +16,7 @@ from claimskg_generator_spark.constants.ratings import (
     RATING_NORMALIZATION_ROWS,
 )
 from claimskg_generator_spark.functions.cleaning import PY_STRIP_REGEX
+from claimskg_generator_spark.functions.frames import local_frame
 
 
 def ratings_dim(spark: SparkSession) -> DataFrame:
@@ -23,8 +24,9 @@ def ratings_dim(spark: SparkSession) -> DataFrame:
         (src, key, name, NORMALIZED_RATING_VALUES[name])
         for src, key, name in RATING_NORMALIZATION_ROWS
     ]
-    return spark.createDataFrame(
-        rows, "r_source string, r_label string, norm_name string, norm_value int"
+    return local_frame(
+        spark, rows,
+        "r_source string, r_label string, norm_name string, norm_value int",
     )
 
 

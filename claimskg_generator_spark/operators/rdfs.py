@@ -37,7 +37,7 @@ executors as broadcast-joined literal relations; the 100 TB data
 frame is touched by exactly four narrow broadcast joins + one
 set-dedup union — no self-join of the data, no iteration, one
 exchange (the final distinct).  This mirrors every other small-dim
-pattern in the engine (ratings table, VALUES relations).
+pattern in the engine (ratings table, JVM local relations).
 
 Reference parity note: the reference emits its graph WITHOUT
 materialized entailment and leaves inference to the consuming SPARQL
@@ -50,6 +50,8 @@ from typing import Dict, Iterable, List, Optional, Sequence, Set, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from claimskg_generator_spark.functions.frames import local_frame
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -131,13 +133,9 @@ def rdfs_entail(triples: DataFrame, ontology: List[Triple],
     parts = [data]
 
     def rel(pairs: Set[Tuple[str, str]], a: str, b: str) -> DataFrame:
-        # SQL VALUES -> a pure-JVM LocalRelation: broadcast-clean plans
-        # (createDataFrame can route through a Python RDD scan)
-        rows = ", ".join(
-            "('{}', '{}')".format(x.replace("'", "''"),
-                                  y.replace("'", "''"))
-            for x, y in sorted(pairs))
-        return spark.sql(f"SELECT * FROM (VALUES {rows}) AS t({a}, {b})")
+        # a pure-JVM LocalRelation (broadcast-clean plans); terms go in
+        # verbatim, never through SQL-literal escaping
+        return local_frame(spark, sorted(pairs), f"{a} string, {b} string")
 
     if sp_closed:
         sp = rel(sp_closed, "p", "q")
@@ -178,8 +176,8 @@ def rdfs_entail(triples: DataFrame, ontology: List[Triple],
             | {(s, DOMAIN, o) for s, o in dom}
             | {(s, RANGE, o) for s, o in rng})
         if schema_rows:
-            sdf = spark.createDataFrame(
-                schema_rows, "subj string, pred string, obj string")
+            sdf = local_frame(
+                spark, schema_rows, "subj string, pred string, obj string")
             if okind_col:
                 sdf = sdf.select("subj", "pred", "obj", *k_uri)
             parts.append(sdf)

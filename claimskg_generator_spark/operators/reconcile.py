@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from claimskg_generator_spark.constants.namespaces import NS
+from claimskg_generator_spark.functions.frames import local_frame
 
 
 def reference_pair_sample_indices(count: int, sample_size: int,
@@ -506,6 +507,14 @@ def _soft_overlap_sums_batch(xs_list, ys_list):
     vals = np.ones(total, dtype=np.float64)
     neq = xc != yc
     if neq.any():
+        # (x << 32) | y packs two codes into one int64 key, unpacked below
+        # by k >> 32 and k & 0xFFFFFFFF: a code of 2^31 or more would turn
+        # the key negative and index the wrong strings, corrupting scores
+        # silently — fail loudly instead (a check -O cannot strip)
+        if len(vocab) > 1 << 31:
+            raise OverflowError(
+                f"{len(vocab)} distinct strings in one batch exceed the "
+                "31-bit codes of the packed pair keys")
         key = (xc[neq].astype(np.int64) << 32) | yc[neq].astype(np.int64)
         # hash-based dedup (first-occurrence order; values are
         # order-independent) — np.unique's sort costs ~2x more here
@@ -878,10 +887,12 @@ def _reconcile_scored(views: DataFrame, theta: float,
     # Persist the slim parsed view once — MEMORY_AND_DISK so a corpus that
     # outgrows executor memory spills instead of failing; at production
     # scale the input is already a materialized claims table and this holds
-    # only the projected scoring columns.
+    # only the projected scoring columns.  A caller that already cached
+    # (and filled) the views keeps its cache as is.
     from pyspark import StorageLevel
 
-    views = views.persist(StorageLevel.MEMORY_AND_DISK)
+    if views.storageLevel == StorageLevel.NONE:
+        views = views.persist(StorageLevel.MEMORY_AND_DISK)
 
     # SLIM blocking self-join: only the block key, prune-predicate columns
     # and the pair identity go through the candidate explosion — a hot
@@ -924,7 +935,7 @@ def _reconcile_scored(views: DataFrame, theta: float,
         spark = views.sparkSession
         n = views.count()
         idx = reference_pair_sample_indices(n, sample_pairs, seed)
-        idx_df = spark.createDataFrame(idx or [], "ia long, ib long")
+        idx_df = local_frame(spark, idx, "ia long, ib long")
         ranked = slim.withColumn(
             "_i", F.row_number().over(_W.orderBy("ord")) - 1
         )

@@ -138,6 +138,7 @@ from typing import Dict, List, Optional, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.functions.frames import local_frame
 from claimskg_generator_spark.operators.sparql import (
     ParsedQuery,
     SparqlSyntaxError,
@@ -546,8 +547,7 @@ def _literal_rel(graph: DataFrame, trips: List[Triple],
             r.append(k)
     uniq = sorted({tuple(r) for r in rows},
                   key=lambda t: tuple("" if v is None else v for v in t))
-    return graph.sparkSession.createDataFrame(
-        [tuple(r) for r in uniq], ", ".join(cols))
+    return local_frame(graph.sparkSession, uniq, ", ".join(cols))
 
 
 def _instantiate(bindings: DataFrame, template: List[Triple],
@@ -865,7 +865,8 @@ def _apply_load(graph: DataFrame, op: ParsedGraphOp) -> DataFrame:
         rec = {"subj": s, "pred": p, "obj": o,
                "graph": gval, "okind": okv}
         recs.add(tuple(rec[c] for c in graph.columns))
-    lit = graph.sparkSession.createDataFrame(
+    lit = local_frame(
+        graph.sparkSession,
         sorted(recs, key=lambda t: tuple(v or "" for v in t)),
         ", ".join(f"{c} string" for c in graph.columns))
     return graph.unionByName(_anti(lit, graph, quads_mode))

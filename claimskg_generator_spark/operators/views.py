@@ -13,7 +13,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from claimskg_generator_spark.functions.cleaning import PY_STRIP_REGEX
-from claimskg_generator_spark.operators.keywords import exploded_keywords
+from claimskg_generator_spark.operators.keywords import (
+    exploded_keywords,
+    keyword_winners,
+)
 
 
 def _empty_str_array():
@@ -65,15 +68,9 @@ def keyword_winner_mentions(claims: DataFrame, model_uri: str,
     the first-writer-wins memo (any row may win several keywords)."""
     if ex is None:
         ex = exploded_keywords(claims, model_uri)
-    per_row = ex.withColumn("has_match", F.size("matched") > 0)
-    winners = (
-        per_row.groupBy("kw_uri")
-        .agg(F.min(F.when(F.col("has_match"), F.col("ord"))).alias("win_ord"))
-        .filter(F.col("win_ord").isNotNull())
-        .select(F.col("kw_uri").alias("w_kw_uri"), "win_ord")
-    )
+    winners = keyword_winners(ex)
     return (
-        per_row
+        ex
         # a keyword repeated in one row's tag list is processed once (the
         # memo is set at the first occurrence) -> dedupe before attaching
         .dropDuplicates(["ord", "kw_uri"])

@@ -141,6 +141,17 @@ class CheckpointManager:
         # pre-identity checkpoints (no marker) are likewise treated as stale
         return self._exists(path, f"_IDENTITY.{token}")
 
+    def resume(self, name: str,
+               token: Optional[str] = None) -> Optional[DataFrame]:
+        """The stage's checkpoint when a complete, identity-matching one
+        exists (recorded as a resume), else None — lets a caller skip
+        building the stage's plan altogether."""
+        if not self.base_dir or not self._done(name, token):
+            return None
+        path = self._path(name)
+        self.events.append((name, "resume", 0.0, path))
+        return self.spark.read.parquet(path)
+
     def materialize(self, name: str, df: DataFrame,
                     token: Optional[str] = None) -> DataFrame:
         """Write-once stage boundary: skip the write when a complete,
@@ -149,11 +160,11 @@ class CheckpointManager:
         lineage."""
         if not self.base_dir:
             return df
+        resumed = self.resume(name, token)
+        if resumed is not None:
+            return resumed
         path = self._path(name)
         t0 = time.time()
-        if self._done(name, token):
-            self.events.append((name, "resume", 0.0, path))
-            return self.spark.read.parquet(path)
         df.write.mode("overwrite").parquet(path)
         if token is not None:
             self._touch(path, f"_IDENTITY.{token}")

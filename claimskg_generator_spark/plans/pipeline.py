@@ -1,13 +1,28 @@
 """End-to-end KG-construction plan.
 
-One lazy DataFrame DAG per run (SURVEY.md EP1 re-expressed):
+One DataFrame DAG per run (SURVEY.md EP1 re-expressed), cut once at its
+fan-out point:
 
     scan (repo,path,commit,lang,content)
-      -> parse/clean/mint (codegen'd column expressions + 5 pandas UDFs)
-      -> broadcast rating-normalization join (J1)
+      -> parse/clean/mint (codegen'd column expressions + the citations
+         pandas UDF) -> broadcast rating-normalization join (J1)
+      == claims stage: MATERIALIZED (Parquet checkpoint, else cache + count)
       -> triple families (core / mentions / keywords / citations / static)
+         [+ logical views -> reconcile self-join]
       -> unionByName -> dropDuplicates (A3, the canonicalization shuffle)
       -> partitioned Parquet triple table or N-Triples text sink
+
+Fill-once rule: a materializing run computes every frame that several
+plan branches share (the claims stage, exploded keywords, distinct
+keywords with their thesaurus matches, keyword winners, reconcile views)
+exactly once, before the query that reads it, so no cache is first
+filled inside the triples write by racing branches.  The shared-frame
+fills run in dependency order on a background thread while the driver
+builds the rest of the plan.  Constant frames (static/thesaurus triples,
+the ratings dimension) are JVM local relations, so no stage runs a
+Python worker just to build literal rows.
+A fully lazy run (no checkpoint dir, ``materialize_parsed=False``)
+launches no job while the plan is built.
 
 Scale posture: the only shuffles are (a) the final distinct, (b) the slim
 per-keyword winner aggregate, (c) the optional duplicate-title self-join.
@@ -29,8 +44,10 @@ from claimskg_generator_spark.constants.static_triples import (
     DEFAULT_GENERATED_AT,
     static_triples,
 )
+from claimskg_generator_spark.functions.frames import CacheFills, local_frame
 from claimskg_generator_spark.functions.udfs import clean_citations
 from claimskg_generator_spark.operators.keywords import (
+    exploded_keywords,
     keyword_triples_and_raw_mentions,
 )
 from claimskg_generator_spark.operators.mentions import (
@@ -52,6 +69,8 @@ from claimskg_generator_spark.sources.thesaurus import (
 )
 
 TRIPLE_DDL = "subj string, pred string, obj string, okind string"
+# sort-key + text line rows of the text sinks' header/footer frames
+_SINK_DDL = "k int, value string"
 
 
 @dataclass
@@ -66,6 +85,8 @@ class PipelineConfig:
         default_factory=lambda: synth.THESAURUS_ENTRIES
     )
     checkpoint_dir: Optional[str] = None
+    # without a checkpoint dir: cache + count the claims stage and fill the
+    # shared frames up front (False: a fully lazy, job-free plan build)
     materialize_parsed: bool = True
     # durable input identity for checkpoint binding (e.g. the input path or
     # "synth:<n>:<seed>").  Plans that embed pickled Python (mapInPandas
@@ -132,117 +153,158 @@ class ClaimsKGPipeline:
         return json.dumps(cfg, sort_keys=True, default=str)
 
     # -- stages ------------------------------------------------------------
-    def parsed(self, input_df: DataFrame) -> DataFrame:
-        """Stage 0: single-pass JSON parse -> flat columns, MATERIALIZED
-        (Parquet checkpoint, else cached).  Confining from_json to one
-        materialized projection keeps every downstream family a cheap
-        column-pruned scan and stops Catalyst from re-parsing the record
-        across UDF/join operator boundaries."""
-        df = parse_records(input_df, self.config.order_col)
-        if self.config.checkpoint_dir:
-            # Input-identity anchor: an explicit config.input_id when given
-            # (required for pickled-Python sources, which don't hash stably
-            # across driver processes), else the parse plan's semanticHash
-            # (parse_records is pure built-ins — stable for file scans).
-            ident = self.config.input_id
-            self._input_token = (
-                hashlib.sha256(
-                    (ident + "\x00" + self._config_blob()).encode()
-                ).hexdigest()[:16]
-                if ident is not None
-                else plan_token(df, self._config_blob())
-            )
-            return self.checkpoints.materialize("parsed", df, self._input_token)
-        if self.config.materialize_parsed:
-            # EAGER cache fill: the triples query launches several
-            # broadcast-build jobs concurrently, and if the cache is still
-            # cold each of them recomputes the parse from scratch (measured
-            # as 6-7 duplicated ~3 s stages at bench scale).  One explicit
-            # materialization action makes every branch a cache read.
-            df = df.cache()
-            df.count()
-        return df
-
-    def claims(self, input_df: DataFrame) -> DataFrame:
-        """Stage 1 (lazy view): clean + mint + normalize over flat columns.
-        Each triple family prunes this projection down to what it reads."""
+    @property
+    def _fill(self) -> bool:
+        """Whether this run materializes its stages (checkpoint or cache):
+        then every shared frame is computed once, up front, before the
+        query that reads it.  Fully lazy runs launch no job until the
+        caller acts on the result."""
         cfg = self.config
-        df = derive_claims(self.parsed(input_df), cfg.model_uri)
+        return bool(cfg.checkpoint_dir) or cfg.materialize_parsed
+
+    def parsed(self, input_df: DataFrame) -> DataFrame:
+        """Stage 0 (lazy): the single from_json pass -> flat columns.  Not
+        materialized on its own: it is the first part of the ``claims``
+        stage, and its plan (pure built-ins, no Python) is what the
+        checkpoint identity hashes."""
+        return parse_records(input_df, self.config.order_col)
+
+    def _derived_claims(self, parsed: DataFrame) -> DataFrame:
+        """The lazy claims plan over a parse: clean + mint + normalize + the
+        citations UDF, on the input scan's own partitions."""
+        cfg = self.config
+        df = derive_claims(parsed, cfg.model_uri)
         df = with_normalized_rating(df, self.spark, cfg.model_uri)
         return df.withColumn(
             "citations", clean_citations(F.col("links"), F.col("source"))
         )
 
-    def triples_raw(self, input_df: DataFrame) -> DataFrame:
-        """Stage 2a: union of all triple families, PRE-dedup (exposed so
-        the dedup strategy can be measured/swapped; not a user surface)."""
-        cfg = self.config
-        claims = self.claims(input_df)
+    def claims(self, input_df: DataFrame) -> DataFrame:
+        """Stage 1, the fan-out point: every triple family, the keyword
+        explode and the views read this frame, so it is MATERIALIZED
+        (Parquet checkpoint ``claims``, else cached and filled by one
+        count).  Downstream branches then scan it column-pruned instead of
+        each re-running the parse, the uuid5 minting, the ratings
+        broadcast and the citations Arrow UDF."""
+        parsed = self.parsed(input_df)
+        df = self._derived_claims(parsed)
+        if self.config.checkpoint_dir:
+            # Input-identity anchor: an explicit config.input_id when given
+            # (required for pickled-Python sources, which don't hash stably
+            # across driver processes), else the PARSE plan's semanticHash
+            # (parse_records is pure built-ins — stable for file scans; the
+            # claims plan holds pandas UDFs, which do not hash stably).
+            ident = self.config.input_id
+            blob = self._config_blob()
+            self._input_token = (
+                hashlib.sha256((ident + "\x00" + blob).encode())
+                .hexdigest()[:16]
+                if ident is not None
+                else plan_token(parsed, blob)
+            )
+            return self.checkpoints.materialize("claims", df,
+                                                self._input_token)
+        if self.config.materialize_parsed:
+            df = df.cache()
+            df.count()
+        return df
 
-        fixed = self.spark.createDataFrame(
+    def fixed_triples(self) -> DataFrame:
+        """The corpus-independent triples (static ontology, thesaurus
+        concepts, category graph) as one JVM local relation."""
+        cfg = self.config
+        return local_frame(
+            self.spark,
             static_triples(cfg.model_uri, cfg.generated_at)
             + thesaurus_triples(cfg.thesaurus_entries)
             + list(cfg.category_triples),
             TRIPLE_DDL,
         )
-        # three corpus branches total:
-        # 1. single-pass per-row emission (core + citations + cw-author
-        #    mention families) — one scan, one explode;
-        # 2. unified mention branch: review + body + keyword-winner mention
-        #    rows unioned raw, ONE Python conf/minting stage, one explode
-        #    (incl. per-category triples);
-        # 3. keyword non-mention families (winner aggregate + broadcast
-        #    thesaurus joins — the only global-view operators).
-        from claimskg_generator_spark.operators.keywords import (
-            exploded_keywords,
-        )
 
-        # one cached exploded-keywords frame for every consumer in this run
-        # (keyword families + logical views when reconciliation is on)
-        ex = exploded_keywords(claims, cfg.model_uri).cache()
-        kw_non_mention, kw_raw = keyword_triples_and_raw_mentions(
-            claims, cfg.model_uri, self.matchers, cfg.threshold, ex
-        )
-        all_raw = review_and_body_raw_mentions(claims, cfg.threshold).unionByName(
-            kw_raw
-        )
-        mention_triples = mention_family_triples(
-            mint_mentions(all_raw), cfg.model_uri
-        )
-        parts = [
-            single_pass_row_triples(claims, cfg.model_uri, cfg.include_body,
-                                    cfg.threshold),
-            mention_triples,
-            kw_non_mention,
-            fixed,
-        ]
-        if cfg.align_duplicated:
-            parts.append(align_duplicated_triples(claims))
-        if cfg.reconcile_theta > 0:
-            from claimskg_generator_spark.operators.reconcile import (
-                reconcile_triples,
-            )
-            from claimskg_generator_spark.operators.views import logical_views
+    def triples_raw(self, input_df: DataFrame) -> DataFrame:
+        """Stage 2a: union of all triple families, PRE-dedup (exposed so
+        the dedup strategy can be measured/swapped; not a user surface)."""
+        return self._families(self.claims(input_df))
 
-            views = logical_views(claims, cfg.model_uri, cfg.threshold, ex)
-            parts.append(
-                reconcile_triples(views, cfg.reconcile_theta,
-                                  cfg.reconcile_sample, cfg.reconcile_seed,
-                                  cfg.reconcile_embeddings,
-                                  cfg.embeddings_file,
-                                  cfg.reconcile_samples)
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    def _families(self, claims: DataFrame) -> DataFrame:
+        """All triple families over the claims stage.  Fill-once rule: when
+        the run materializes, each frame several branches share (exploded
+        keywords, distinct keywords with their thesaurus matches, keyword
+        winners, reconcile views) is cached and filled in dependency order
+        — on a background thread, while the rest of the plan is built —
+        and all fills are done before this returns, so the query built
+        from the returned plan only reads loaded caches."""
+        cfg = self.config
+        with CacheFills(self._fill) as fills:
+            # one cached exploded-keywords frame for every consumer in this
+            # run (keyword families + logical views when reconciling)
+            ex = fills(exploded_keywords(claims, cfg.model_uri))
+            kw_non_mention, kw_raw = keyword_triples_and_raw_mentions(
+                claims, cfg.model_uri, self.matchers, cfg.threshold, ex,
+                fills)
+            views = None
+            if cfg.reconcile_theta > 0:
+                from claimskg_generator_spark.operators.views import (
+                    logical_views,
+                )
+
+                # reads ex and the cached keyword winners, so it queues
+                # right behind them; reconcile keeps this cache instead of
+                # persisting its own copy
+                views = fills(
+                    logical_views(claims, cfg.model_uri, cfg.threshold, ex))
+
+            # three corpus branches total:
+            # 1. single-pass per-row emission (core + citations + cw-author
+            #    mention families) — one scan, one explode;
+            # 2. unified mention branch: review + body + keyword-winner
+            #    mention rows unioned raw, ONE Python conf/minting stage, one
+            #    explode (incl. per-category triples);
+            # 3. keyword non-mention families (winner aggregate + broadcast
+            #    thesaurus joins — the only global-view operators).
+            all_raw = review_and_body_raw_mentions(
+                claims, cfg.threshold).unionByName(kw_raw)
+            parts = [
+                single_pass_row_triples(claims, cfg.model_uri,
+                                        cfg.include_body, cfg.threshold),
+                mention_family_triples(mint_mentions(all_raw),
+                                       cfg.model_uri),
+                kw_non_mention,
+                self.fixed_triples(),
+            ]
+            if cfg.align_duplicated:
+                parts.append(align_duplicated_triples(claims))
+            if views is not None:
+                from claimskg_generator_spark.operators.reconcile import (
+                    reconcile_triples,
+                )
+
+                parts.append(
+                    reconcile_triples(views, cfg.reconcile_theta,
+                                      cfg.reconcile_sample,
+                                      cfg.reconcile_seed,
+                                      cfg.reconcile_embeddings,
+                                      cfg.embeddings_file,
+                                      cfg.reconcile_samples)
+                )
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionByName(p)
+            return out
 
     def triples(self, input_df: DataFrame) -> DataFrame:
         """Stage 2: all triple families, deduplicated (graph set semantics,
         A3).  Dedup plan per config.dedup_strategy — two_phase shuffles a
         128-bit key per triple instead of the full-width row (see
         operators/dedup.py two_phase_distinct)."""
-        out = self.triples_raw(input_df)
+        # the claims stage first (it sets the input token); a complete
+        # triples checkpoint then resumes without building — and so without
+        # filling — any of the triples-stage frames
+        claims = self.claims(input_df)
+        resumed = self.checkpoints.resume("triples", self._triples_token())
+        if resumed is not None:
+            return resumed
+        out = self._families(claims)
         dedup_cols = ["subj", "pred", "obj", "okind"]
         if self.config.dedup_strategy == "two_phase":
             from claimskg_generator_spark.operators.dedup import (
@@ -260,23 +322,26 @@ class ClaimsKGPipeline:
             # iterative star rounds run driver-side actions; the flag is
             # part of _config_blob, so checkpoint identity tracks it
             deduped = canonicalize_sameas(deduped)
-        # Derive the token from the parsed-stage token, NOT the triples plan:
-        # plans holding pandas UDFs don't hash stably across instances, and
-        # triples are a pure function of (parsed data, config, code) anyway.
-        token = None
-        if self._input_token is not None:
-            token = hashlib.sha256(
-                (self._input_token + "\x00" + self._config_blob()).encode()
-            ).hexdigest()[:16]
-        result = self.checkpoints.materialize("triples", deduped, token)
+        result = self.checkpoints.materialize("triples", deduped,
+                                              self._triples_token())
         if self.config.checkpoint_dir:
             # materialize() above was eager (checkpoint write): the stage
             # caches feeding it (two_phase_distinct's persisted raw-triples
-            # frame, the exploded-keywords cache) are spent — free them so
+            # frame, the keyword and views caches) are spent — free them so
             # long-lived drivers don't accumulate per-run caches.  The
             # result itself is a fresh parquet scan, unaffected.
             self.spark.catalog.clearCache()
         return result
+
+    def _triples_token(self) -> Optional[str]:
+        """Derived from the claims-stage input token, NOT the triples plan:
+        plans holding pandas UDFs don't hash stably across instances, and
+        triples are a pure function of (input, config, code) anyway."""
+        if self._input_token is None:
+            return None
+        return hashlib.sha256(
+            (self._input_token + "\x00" + self._config_blob()).encode()
+        ).hexdigest()[:16]
 
     # -- sinks ---------------------------------------------------------------
     def write_triples(self, triples: DataFrame, path: str,
@@ -331,9 +396,9 @@ class ClaimsKGPipeline:
         (one extra shuffle on subj, ~30% smaller output); default is one
         triple per line — shuffle-free and streaming-append friendly."""
         used = [(p, ns) for p, ns in TTL_PREFIXES]
-        header = self.spark.createDataFrame(
-            [(0, f"@prefix {p}: <{ns}> .") for p, ns in used],
-            "k int, value string",
+        header = local_frame(
+            self.spark, [(0, f"@prefix {p}: <{ns}> .") for p, ns in used],
+            _SINK_DDL,
         )
         obj = (
             F.when(F.col("okind") == "uri", _ttl_uri(F.col("obj")))
@@ -390,8 +455,8 @@ class ClaimsKGPipeline:
         (zero triples) so every body line can carry a trailing comma —
         no global last-row bookkeeping.  Parse-back equality pinned by
         tests/test_jsonld_sink.py."""
-        header = self.spark.createDataFrame([(0, "[")], "k int, value string")
-        footer = self.spark.createDataFrame([(2, "{}]")], "k int, value string")
+        header = local_frame(self.spark, [(0, "[")], _SINK_DDL)
+        footer = local_frame(self.spark, [(2, "{}]")], _SINK_DDL)
         subj = _json_escape(F.col("subj"))
         pred = _json_escape(F.col("pred"))
         obj = _json_escape(F.col("obj"))
@@ -433,9 +498,8 @@ class ClaimsKGPipeline:
                 (1, "<rdf:RDF")]
         decl += [(2, f'   xmlns:{p}="{ns}"') for p, ns in TTL_PREFIXES]
         decl += [(3, ">")]
-        header = self.spark.createDataFrame(decl, "k int, value string")
-        footer = self.spark.createDataFrame([(5, "</rdf:RDF>")],
-                                            "k int, value string")
+        header = local_frame(self.spark, decl, _SINK_DDL)
+        footer = local_frame(self.spark, [(5, "</rdf:RDF>")], _SINK_DDL)
         qname, xmlns = _xml_pred_parts(F.col("pred"))
         obj_attr = _xml_escape(F.col("obj"), attr=True)
         obj_text = _xml_escape(F.col("obj"))
@@ -503,9 +567,10 @@ class ClaimsKGPipeline:
         )
 
         cfg = self.config
-        # claims derivation is narrow (projections + a broadcast join), so
-        # spark_partition_id() here still equals the input-scan split id
-        claims = self.claims(input_df)
+        # the LAZY claims plan, not the materialized stage: its derivation
+        # is narrow (projections + a broadcast join), so spark_partition_id()
+        # here still equals the input-scan split id
+        claims = self._derived_claims(self.parsed(input_df))
         n_triples = (
             F.size(row_triple_array(cfg.model_uri, cfg.include_body))
             + _mention_triple_count(F.col("m_review"), cfg.threshold)

@@ -9,16 +9,17 @@ Two-layer design, deliberate for scale:
 1. ``parse_records``: ONE projection that runs from_json(content) once per
    row (whole-stage codegen + common-subexpression elimination inside a
    single Project) and lands *flat* string fields + the four parsed
-   mention-annotation arrays.  The pipeline materializes this stage
-   (Parquet checkpoint or cache) — at 100 TB you parse the corpus once,
-   columnar, and every downstream family scans only the fields it needs
-   (column pruning).  Keeping from_json confined to a single materialized
-   projection also avoids Catalyst duplicating the expensive parse across
+   mention-annotation arrays.  Keeping from_json confined to a single
+   projection avoids Catalyst duplicating the expensive parse across
    operator boundaries (UDF/join nodes), which we measured at ~6x cost.
 
-2. ``derive_claims``: cheap column derivations (null->'' coercion, text
-   normalization, JVM-side uuid5 URI minting) over the flat columns —
-   lazy, recomputed per triple family, pruned to what each family reads.
+2. ``derive_claims``: column derivations (null->'' coercion, text
+   normalization, JVM-side uuid5 URI minting) over the flat columns.
+
+The pipeline materializes the claims frame built on both (plus the rating
+join and the citations UDF) as ONE stage (Parquet checkpoint or cache) —
+at 100 TB you parse and mint the corpus once, columnar, and every
+downstream family scans only the fields it needs (column pruning).
 
 ``ord`` is the canonical processing-order key (the reference processes CSV
 rows top-to-bottom; the synthetic corpus encodes that order in ``path``).
@@ -175,8 +176,8 @@ def source_homepage_col(author: Column) -> Column:
 def parse_records(input_df: DataFrame, order_col: str = "path") -> DataFrame:
     """Stage 0: one from_json pass -> flat fields + parsed mention arrays.
 
-    This is the projection the pipeline materializes; everything downstream
-    reads flat columns only."""
+    The first half of the pipeline's materialized claims stage; everything
+    downstream reads flat columns only."""
     rec = F.from_json(F.col("content"), RECORD_SCHEMA).alias("r")
     base = input_df.select(
         F.col(order_col).alias("ord"),
@@ -195,7 +196,8 @@ def parse_records(input_df: DataFrame, order_col: str = "path") -> DataFrame:
 
 
 def derive_claims(parsed: DataFrame, model_uri: str = DEFAULT_MODEL_URI) -> DataFrame:
-    """Stage 1 (lazy): cleaned fields + minted URIs from flat columns."""
+    """Cleaned fields + minted URIs from flat columns (lazy; the pipeline
+    materializes the result as its claims stage)."""
     c = F.col
     sv = lambda f: _sv(c(f))  # noqa: E731
 

@@ -25,8 +25,9 @@ def test_checkpoint_resume_identical(spark):
     assert t1 == t2
     assert all(e[1] == "resume" for e in p2.checkpoints.events)
 
-    # simulate a crash AFTER the parse stage: drop the triples checkpoint,
-    # keep 'parsed' — rerun resumes the parse and recomputes only triples
+    # simulate a crash AFTER the first stage: drop the triples checkpoint,
+    # keep 'claims' — rerun resumes the claims stage and recomputes only
+    # triples
     import shutil
 
     shutil.rmtree(os.path.join(base, "triples"))
@@ -34,9 +35,9 @@ def test_checkpoint_resume_identical(spark):
     t3 = {tuple(r) for r in p3.run(corpus).collect()}
     assert t1 == t3
     actions = {s: a for s, a, _, _ in p3.checkpoints.events}
-    assert actions["parsed"] == "resume" and actions["triples"] == "write"
+    assert actions["claims"] == "resume" and actions["triples"] == "write"
     manifest = json.load(open(os.path.join(base, "manifest.json")))
-    assert {m["stage"] for m in manifest} == {"parsed", "triples"}
+    assert {m["stage"] for m in manifest} == {"claims", "triples"}
 
 
 def test_checkpoint_stale_on_input_or_config_change(spark):

@@ -88,6 +88,19 @@ def test_domain_range_lift_through_superproperty(spark):
     assert ("a", RDF_TYPE, "C") in got and ("b", RDF_TYPE, "D") in got
 
 
+def test_backslash_terms_pass_through_verbatim(spark):
+    # ontology terms reach the rule relations as-is: a backslash followed
+    # by 'n' must stay two characters, never become a newline
+    cls, sup, prop = "urn:C\\nX", "urn:S\\tY", "urn:p\\'q"
+    onto = [(cls, SUBCLASS, sup), (prop, DOMAIN, cls)]
+    df = spark.createDataFrame([("a", prop, "b")], SCHEMA3)
+    got = set(map(tuple, rdfs_entail(df, onto, include_schema=True)
+                  .collect()))
+    assert ("a", RDF_TYPE, cls) in got and ("a", RDF_TYPE, sup) in got
+    assert (cls, SUBCLASS, sup) in got
+    assert not any("\n" in v or "\t" in v for t in got for v in t)
+
+
 def test_include_schema_emits_closed_ontology(spark):
     df = spark.createDataFrame([("a", "imports", "b")], SCHEMA3)
     got = set(map(tuple, rdfs_entail(df, ONTO, include_schema=True)
