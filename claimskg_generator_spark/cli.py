@@ -19,6 +19,7 @@ Local smoke run:  python -m claimskg_generator_spark.cli --synth 10000 ...
 """
 
 import argparse
+import dataclasses
 import sys
 
 from pyspark.sql import SparkSession
@@ -286,41 +287,7 @@ def main(argv=None) -> int:
             )
         thesaurus_kwargs["thesaurus_entries"] = entries
 
-    if args.streaming:
-        from claimskg_generator_spark.streaming.ingest import (
-            compact_triple_log,
-            stream_triples,
-        )
-
-        scfg = PipelineConfig(
-            model_uri=args.model_uri,
-            **thesaurus_kwargs,
-            threshold=args.threshold,
-            recognizer=args.recognizer,
-            include_body=args.include_body,
-            align_duplicated=args.align_duplicated,
-            sameas_canonical=args.sameas_canonical,
-            reconcile_theta=args.reconcile,
-            reconcile_sample=args.sample,
-            reconcile_samples=args.samples,
-            reconcile_seed=args.seed,
-            reconcile_embeddings=args.embeddings,
-            embeddings_file=args.embeddings_file,
-            # args.checkpoint_dir is the STREAM's progress log, not the
-            # batch-pipeline memo; compaction recomputes from the corpus
-            materialize_parsed=False,
-        )
-        q = stream_triples(spark, args.input, args.output,
-                           args.checkpoint_dir, scfg)
-        q.awaitTermination()
-        print(f"drained streaming input; triple log at {args.output}")
-        if args.compact_to:
-            compact_triple_log(spark, args.input, args.output,
-                               args.compact_to, scfg)
-            print(f"compacted triple table at {args.compact_to}")
-        return 0
-
-    cfg = PipelineConfig(
+    base = PipelineConfig(
         model_uri=args.model_uri,
         **thesaurus_kwargs,
         threshold=args.threshold,
@@ -334,6 +301,29 @@ def main(argv=None) -> int:
         reconcile_seed=args.seed,
         reconcile_embeddings=args.embeddings,
         embeddings_file=args.embeddings_file,
+    )
+
+    if args.streaming:
+        from claimskg_generator_spark.streaming.ingest import (
+            compact_triple_log,
+            stream_triples,
+        )
+
+        # args.checkpoint_dir is the STREAM's progress log, not the
+        # batch-pipeline memo; compaction recomputes from the corpus
+        scfg = dataclasses.replace(base, materialize_parsed=False)
+        q = stream_triples(spark, args.input, args.output,
+                           args.checkpoint_dir, scfg)
+        q.awaitTermination()
+        print(f"drained streaming input; triple log at {args.output}")
+        if args.compact_to:
+            compact_triple_log(spark, args.input, args.output,
+                               args.compact_to, scfg)
+            print(f"compacted triple table at {args.compact_to}")
+        return 0
+
+    cfg = dataclasses.replace(
+        base,
         checkpoint_dir=args.checkpoint_dir,
         # durable checkpoint identity across driver restarts: synth corpora
         # are identified by (n, seed); file inputs by path + a CONTENT

@@ -32,11 +32,7 @@ from claimskg_generator_spark.functions.frames import CacheFills
 from claimskg_generator_spark.functions.textmatch import PhraseMatcher
 from claimskg_generator_spark.functions.udfs import make_keyword_match_udf
 from claimskg_generator_spark.functions.uuid5 import uuid5_url_col
-from claimskg_generator_spark.operators.mentions import (
-    explode_raw_mentions,
-    mention_family_triples,
-    mint_mentions,
-)
+from claimskg_generator_spark.operators.mentions import explode_raw_mentions
 from claimskg_generator_spark.operators.triples import (
     OKIND_LANG_EN,
     OKIND_URI,
@@ -193,15 +189,3 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
     )
     return non_mention, win_raw
 
-
-def keyword_triples(claims: DataFrame, model_uri: str,
-                    matchers: Dict[str, PhraseMatcher],
-                    threshold: float) -> DataFrame:
-    """Standalone variant: keyword triples including the winner-mention
-    family (used outside the unified pipeline pass)."""
-    non_mention, win_raw = keyword_triples_and_raw_mentions(
-        claims, model_uri, matchers, threshold
-    )
-    return non_mention.unionByName(
-        mention_family_triples(mint_mentions(win_raw), model_uri)
-    )

@@ -12,8 +12,9 @@ Only operators that need a global view stay out: keyword families (winner
 aggregate + broadcast joins), duplicate alignment, reconciliation, static
 triples.
 
-Semantics are identical to operators/triples.py + operators/mentions.py
-(the golden tests pin both paths against the oracle).
+This is the only emitter of these families: the batch pipeline, the
+lineage counter and the streaming ingest all call it, and the golden tests
+pin its triple set against the oracle.
 """
 
 from pyspark.sql import Column, DataFrame
@@ -43,8 +44,12 @@ def _truthy(col: Column) -> Column:
 
 
 def core_triple_array(model_uri: str, include_body: bool) -> Column:
-    """The conditional fixed-size family (see operators/triples.py
-    core_claim_triples for the reference citations)."""
+    """The conditional fixed-size family: ClaimReview + Organization +
+    CreativeWork(base) + both Rating nodes — the per-row families of
+    reference _create_schema_claim_review (:271-315), _create_organization
+    (:317-331), _create_creative_work core (:363-371, 442-473),
+    _create_review_rating (:475-518) and the generate_model edges
+    (:697-709)."""
     english = model_uri + "language/English"
     claimskg_org = model_uri + "organization/claimskg"
     c = F.col
@@ -77,7 +82,8 @@ def core_triple_array(model_uri: str, include_body: bool) -> Column:
              triple_struct(c("original_rating_uri"), NS.SCHEMA_ALTERNATE_NAME,
                            escape_b64(c("raw_rating_alt")), NS.XSD_B64)),
         triple_struct(c("original_rating_uri"), NS.RDF_TYPE, NS.SCHEMA_RATING, OKIND_URI),
-        # failed try_cast drops the triple (never "nan"^^xsd:float)
+        # non-empty AND numeric: a failed try_cast drops the triple (the
+        # reference would raise on float(); "nan"^^xsd:float is never emitted)
         _opt(_truthy(c("rating_value_clean"))
              & c("rating_value_clean").try_cast("double").isNotNull(),
              triple_struct(c("original_rating_uri"), NS.SCHEMA_RATING_VALUE,
@@ -101,6 +107,8 @@ def core_triple_array(model_uri: str, include_body: bool) -> Column:
 
 
 def citation_triple_array() -> Column:
+    """(cw, schema:citation, cleaned-url) from the scrubbed link list
+    (reference :412-437 via the clean_citations pandas UDF)."""
     return F.transform(
         F.coalesce(F.col("citations"),
                    F.array().cast("array<struct<cleaned:string,uri:string>>")),
@@ -110,6 +118,8 @@ def citation_triple_array() -> Column:
 
 
 def author_mention_triple_array() -> Column:
+    """creative-work-author mentions: no threshold, direct dbr link
+    (reference :456-463)."""
     arr = F.transform(
         F.coalesce(F.col("m_author"), F.array().cast(
             "array<struct<begin:bigint,end:bigint,text:string,entity:string,"

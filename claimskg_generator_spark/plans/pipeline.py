@@ -106,19 +106,6 @@ class PipelineConfig:
     # real word-vector text file for the embeddings term (None -> the
     # deterministic hash-vector fixture)
     embeddings_file: Optional[str] = None
-    # graph-set dedup plan: "wide" (plain dropDuplicates) or "two_phase"
-    # (narrow 128-bit-key shuffle + broadcast duplicate keyspace —
-    # operators/dedup.py two_phase_distinct).  MEASURED default: at the
-    # triples stage's 27% duplicate rate the duplicates are overwhelmingly
-    # intra-partition (one claim re-emitting a triple), so dropDuplicates'
-    # map-side combine removes them before the exchange and the wide
-    # shuffle adds only ~8% to the stage (raw-union count 36.5 s vs
-    # dedup'd count 39.7 s at 320k rows / 4 cores), while two_phase pays a
-    # full cache materialization of the raw 16.7M-triple frame (68 s vs
-    # 54 s end-to-end).  two_phase is the right plan for LOW-dup-rate
-    # wide-row corpora where the dup keyspace is broadcastable; here it
-    # is not the bottleneck.
-    dedup_strategy: str = "wide"
     # rewrite pairwise owl:sameAs edges (reconcile + align families) into
     # star form: every equivalence-class member points at the class's
     # minimum URI (operators/components.py canonicalize_sameas).  The
@@ -169,11 +156,12 @@ class ClaimsKGPipeline:
         checkpoint identity hashes."""
         return parse_records(input_df, self.config.order_col)
 
-    def _derived_claims(self, parsed: DataFrame) -> DataFrame:
-        """The lazy claims plan over a parse: clean + mint + normalize + the
-        citations UDF, on the input scan's own partitions."""
+    def derived_claims(self, input_df: DataFrame) -> DataFrame:
+        """The lazy claims plan: parse + clean + mint + normalize + the
+        citations UDF, on the input scan's own partitions.  ``claims``
+        materializes it; lineage and the streaming ingest read it as is."""
         cfg = self.config
-        df = derive_claims(parsed, cfg.model_uri)
+        df = derive_claims(self.parsed(input_df), cfg.model_uri)
         df = with_normalized_rating(df, self.spark, cfg.model_uri)
         return df.withColumn(
             "citations", clean_citations(F.col("links"), F.col("source"))
@@ -186,8 +174,7 @@ class ClaimsKGPipeline:
         count).  Downstream branches then scan it column-pruned instead of
         each re-running the parse, the uuid5 minting, the ratings
         broadcast and the citations Arrow UDF."""
-        parsed = self.parsed(input_df)
-        df = self._derived_claims(parsed)
+        df = self.derived_claims(input_df)
         if self.config.checkpoint_dir:
             # Input-identity anchor: an explicit config.input_id when given
             # (required for pickled-Python sources, which don't hash stably
@@ -200,7 +187,7 @@ class ClaimsKGPipeline:
                 hashlib.sha256((ident + "\x00" + blob).encode())
                 .hexdigest()[:16]
                 if ident is not None
-                else plan_token(parsed, blob)
+                else plan_token(self.parsed(input_df), blob)
             )
             return self.checkpoints.materialize("claims", df,
                                                 self._input_token)
@@ -223,7 +210,7 @@ class ClaimsKGPipeline:
 
     def triples_raw(self, input_df: DataFrame) -> DataFrame:
         """Stage 2a: union of all triple families, PRE-dedup (exposed so
-        the dedup strategy can be measured/swapped; not a user surface)."""
+        the dedup can be measured; not a user surface)."""
         return self._families(self.claims(input_df))
 
     def _families(self, claims: DataFrame) -> DataFrame:
@@ -294,9 +281,9 @@ class ClaimsKGPipeline:
 
     def triples(self, input_df: DataFrame) -> DataFrame:
         """Stage 2: all triple families, deduplicated (graph set semantics,
-        A3).  Dedup plan per config.dedup_strategy — two_phase shuffles a
-        128-bit key per triple instead of the full-width row (see
-        operators/dedup.py two_phase_distinct)."""
+        A3) by one dropDuplicates: most duplicates are intra-partition (one
+        claim re-emitting a triple), so its map-side combine removes them
+        before the exchange."""
         # the claims stage first (it sets the input token); a complete
         # triples checkpoint then resumes without building — and so without
         # filling — any of the triples-stage frames
@@ -304,16 +291,8 @@ class ClaimsKGPipeline:
         resumed = self.checkpoints.resume("triples", self._triples_token())
         if resumed is not None:
             return resumed
-        out = self._families(claims)
-        dedup_cols = ["subj", "pred", "obj", "okind"]
-        if self.config.dedup_strategy == "two_phase":
-            from claimskg_generator_spark.operators.dedup import (
-                two_phase_distinct,
-            )
-
-            deduped = two_phase_distinct(out, dedup_cols)
-        else:
-            deduped = out.dropDuplicates(dedup_cols)
+        deduped = self._families(claims).dropDuplicates(
+            ["subj", "pred", "obj", "okind"])
         if self.config.sameas_canonical:
             from claimskg_generator_spark.operators.components import (
                 canonicalize_sameas,
@@ -326,10 +305,9 @@ class ClaimsKGPipeline:
                                               self._triples_token())
         if self.config.checkpoint_dir:
             # materialize() above was eager (checkpoint write): the stage
-            # caches feeding it (two_phase_distinct's persisted raw-triples
-            # frame, the keyword and views caches) are spent — free them so
-            # long-lived drivers don't accumulate per-run caches.  The
-            # result itself is a fresh parquet scan, unaffected.
+            # caches feeding it (the keyword and views caches) are spent —
+            # free them so long-lived drivers don't accumulate per-run
+            # caches.  The result itself is a fresh parquet scan, unaffected.
             self.spark.catalog.clearCache()
         return result
 
@@ -570,7 +548,7 @@ class ClaimsKGPipeline:
         # the LAZY claims plan, not the materialized stage: its derivation
         # is narrow (projections + a broadcast join), so spark_partition_id()
         # here still equals the input-scan split id
-        claims = self._derived_claims(self.parsed(input_df))
+        claims = self.derived_claims(input_df)
         n_triples = (
             F.size(row_triple_array(cfg.model_uri, cfg.include_body))
             + _mention_triple_count(F.col("m_review"), cfg.threshold)
@@ -763,36 +741,40 @@ def _nt_escape(col):
     return out
 
 
+def _nt_node(col: Column) -> Column:
+    """A URI term in angle brackets.  Blank-node labels are legal
+    N-Triples terms in subject/object (and N-Quads graph) position and
+    must NOT be bracketed (sources/turtle.py can ingest them;
+    operators/skolem.skolemize is the bridge to sinks that cannot express
+    them).  The claims/code KGs mint URIs only, so this branch leaves
+    their byte goldens untouched."""
+    return F.when(col.startswith("_:"), col) \
+        .otherwise(F.concat(F.lit("<"), col, F.lit(">")))
+
+
+def _nt_spo() -> Column:
+    """``subj <pred> obj`` of a (subj, pred, obj, okind) row, without the
+    closing " ." — the term rendering shared by the N-Triples and N-Quads
+    sinks."""
+    okind = F.col("okind")
+    lit = F.concat(F.lit('"'), _nt_escape(F.col("obj")), F.lit('"'))
+    obj_t = (
+        F.when(okind == "uri", _nt_node(F.col("obj")))
+        .when(okind == "", lit)
+        .when(okind.startswith("@"), F.concat(lit, okind))
+        .otherwise(F.concat(lit, F.lit("^^<"), okind, F.lit(">")))
+    )
+    return F.concat(_nt_node(F.col("subj")), F.lit(" <"), F.col("pred"),
+                    F.lit("> "), obj_t)
+
+
 def write_ntriples(triples: DataFrame, path: str) -> None:
     """Canonical sorted N-Triples sink for ANY (subj, pred, obj, okind)
     frame — module-level so non-claims graphs (the code KG) serialize
     without constructing a pipeline; ClaimsKGPipeline.write_ntriples
     delegates here (byte output pinned by tests/test_golden_ntriples)."""
-    # blank-node labels are legal N-Triples terms in subject/object
-    # position and must NOT be angle-bracketed (sources/turtle.py can
-    # ingest them; operators/skolem.skolemize is the bridge to sinks
-    # that cannot express them).  The claims/code KGs mint URIs only,
-    # so this branch leaves their byte goldens untouched.
-    subj_t = F.when(F.col("subj").startswith("_:"), F.col("subj")) \
-        .otherwise(F.concat(F.lit("<"), F.col("subj"), F.lit(">")))
-    uri_obj = F.when(F.col("obj").startswith("_:"), F.col("obj")) \
-        .otherwise(F.concat(F.lit("<"), F.col("obj"), F.lit(">")))
     nt = triples.select(
-        F.concat(
-            subj_t, F.lit(" <"), F.col("pred"),
-            F.lit("> "),
-            F.when(F.col("okind") == "uri", uri_obj)
-            .when(F.col("okind") == "",
-                  F.concat(F.lit('"'), _nt_escape(F.col("obj")),
-                           F.lit('"')))
-            .when(F.col("okind").startswith("@"),
-                  F.concat(F.lit('"'), _nt_escape(F.col("obj")),
-                           F.lit('"'), F.col("okind")))
-            .otherwise(F.concat(F.lit('"'), _nt_escape(F.col("obj")),
-                                F.lit('"^^<'), F.col("okind"),
-                                F.lit(">"))),
-            F.lit(" ."),
-        ).alias("value")
+        F.concat(_nt_spo(), F.lit(" .")).alias("value")
     ).orderBy("value")
     nt.write.mode("overwrite").text(path)
 
@@ -806,32 +788,12 @@ def write_nquads(triples: DataFrame, path: str,
     per-stage, per-snapshot graphs — e.g.
     ``with_graph(triples, F.lit(source_uri))``).  Rows whose graph
     column is NULL or empty serialize as plain triples (the default
-    graph, per spec).  Same term rendering as write_ntriples — blank
-    labels legal and unbracketed, the shared escaper for literals."""
-    subj_t = F.when(F.col("subj").startswith("_:"), F.col("subj")) \
-        .otherwise(F.concat(F.lit("<"), F.col("subj"), F.lit(">")))
-    uri_obj = F.when(F.col("obj").startswith("_:"), F.col("obj")) \
-        .otherwise(F.concat(F.lit("<"), F.col("obj"), F.lit(">")))
-    obj_t = (
-        F.when(F.col("okind") == "uri", uri_obj)
-        .when(F.col("okind") == "",
-              F.concat(F.lit('"'), _nt_escape(F.col("obj")), F.lit('"')))
-        .when(F.col("okind").startswith("@"),
-              F.concat(F.lit('"'), _nt_escape(F.col("obj")),
-                       F.lit('"'), F.col("okind")))
-        .otherwise(F.concat(F.lit('"'), _nt_escape(F.col("obj")),
-                            F.lit('"^^<'), F.col("okind"), F.lit(">")))
-    )
+    graph, per spec).  Same term rendering as write_ntriples."""
     g = F.col(graph_col)
-    graph_t = F.when(
-        g.isNull() | (g == ""), F.lit("")
-    ).otherwise(F.concat(
-        F.lit(" "),
-        F.when(g.startswith("_:"), g)
-        .otherwise(F.concat(F.lit("<"), g, F.lit(">")))))
+    graph_t = F.when(g.isNull() | (g == ""), F.lit("")) \
+        .otherwise(F.concat(F.lit(" "), _nt_node(g)))
     nq = triples.select(
-        F.concat(subj_t, F.lit(" <"), F.col("pred"), F.lit("> "),
-                 obj_t, graph_t, F.lit(" .")).alias("value")
+        F.concat(_nt_spo(), graph_t, F.lit(" .")).alias("value")
     ).orderBy("value")
     nq.write.mode("overwrite").text(path)
 

@@ -175,9 +175,7 @@ def test_batched_levenshtein_matches_scalar():
 
 def test_batched_overlap_terms_match_soft_overlap():
     from claimskg_generator_spark.operators.reconcile import (
-        _lev_batch,
-        _overlap_terms,
-        _sum_terms,
+        _soft_overlap_sums_batch,
         soft_overlap,
     )
 
@@ -187,11 +185,10 @@ def test_batched_overlap_terms_match_soft_overlap():
         (["same", "same"], ["same"]),
         (["kw one", "kw two"], ["kw two", "kw threee"]),
     ]
-    pa, pb, memo = [], [], {}
-    term_lists = [_overlap_terms(xs, ys, pa, pb, memo) for xs, ys in cases]
-    sims = _lev_batch(pa, pb) if pa else ()
-    for (xs, ys), terms in zip(cases, term_lists):
-        assert _sum_terms(terms, sims) == soft_overlap(xs, ys)
+    sums = _soft_overlap_sums_batch([xs for xs, _ in cases],
+                                    [ys for _, ys in cases])
+    for (xs, ys), got in zip(cases, sums):
+        assert got == soft_overlap(xs, ys)
 
 
 def test_myers_kernel_matches_dp_and_scalar():
@@ -226,25 +223,30 @@ def test_myers_kernel_matches_dp_and_scalar():
         assert myers[i] == want and dp[i] == want, (repr(a), repr(b))
 
 
-def test_sim_cache_resolves_terms_identically():
-    """Process-level similarity cache: a second _overlap_terms pass over
-    the same vocabulary must resolve every unequal pair from the cache
-    (no new jobs) with identical summed overlap."""
+def test_sim_cache_resolves_terms_identically(monkeypatch):
+    """Process-level similarity cache: a second batch over the same
+    vocabulary must resolve every unequal pair from the cache (no kernel
+    call) with identical summed overlap."""
     from claimskg_generator_spark.operators import reconcile as R
 
-    xs = ["alpha one", "beta two"]
-    ys = ["beta two", "gamma threee"]
-    R._SIM_CACHE.clear()
-    pa, pb, memo = [], [], {}
-    t1 = R._overlap_terms(xs, ys, pa, pb, memo)
-    sims = R._lev_batch(pa, pb)
-    R._fill_sim_cache(memo, sims)
-    first = R._sum_terms(t1, sims)
+    kernel = R._lev_batch
+    calls = []
 
-    pa2, pb2, memo2 = [], [], {}
-    t2 = R._overlap_terms(xs, ys, pa2, pb2, memo2)
-    assert not pa2, "cache miss: jobs were re-enqueued"
-    assert R._sum_terms(t2, ()) == first == R.soft_overlap(xs, ys)
+    def counting(pa, pb):
+        calls.append(len(pa))
+        return kernel(pa, pb)
+
+    monkeypatch.setattr(R, "_lev_batch", counting)
+    xs = [["alpha one", "beta two"]]
+    ys = [["beta two", "gamma threee"]]
+    R._SIM_CACHE.clear()
+    first = R._soft_overlap_sums_batch(xs, ys)
+    assert calls, "first batch never reached the kernel"
+    n_first = len(calls)
+
+    second = R._soft_overlap_sums_batch(xs, ys)
+    assert len(calls) == n_first, "cache miss: the kernel ran again"
+    assert list(second) == list(first) == [R.soft_overlap(xs[0], ys[0])]
     R._SIM_CACHE.clear()
 
 
@@ -308,16 +310,11 @@ def test_reconcile_exact_sample_matches_reference_stream(spark, claims_df):
     )
 
 
-def test_global_dedup_scorer_bit_exact(spark):
-    """The production global-dedupe scorer (_score_pairs_global_dedup:
-    JVM term expansion + global Levenshtein-job dedup + order-preserving
-    JVM sums) must equal BOTH the retained batched Arrow scorer and the
-    scalar claim_pair_score bit-for-bit — no rounding tolerance."""
-    from pyspark.sql import functions as F
-
+def test_pair_score_udf_bit_exact(spark):
+    """The production batched Arrow scorer (_pair_score_udf) must equal
+    the scalar claim_pair_score bit-for-bit — no rounding tolerance."""
     from claimskg_generator_spark.operators.reconcile import (
         _pair_score_udf,
-        _score_pairs_global_dedup,
         claim_pair_score,
         soft_overlap,
     )
@@ -328,9 +325,9 @@ def test_global_dedup_scorer_bit_exact(spark):
          ["Obama"], ["Obamacare"], ["politics"], ["policy"], None),
         # all-empty fields except links
         ([], [], ["a"], ["b"], [], [], [], [], None),
-        # zero-term pair: everything empty (collect_list group absent)
+        # zero-term pair: everything empty
         ([], [], [], [], [], [], [], [], None),
-        # repeated vocab across rows (exercises the global dedup)
+        # repeated vocab across rows (exercises the per-batch term dedup)
         (["tax", "economy"], ["taxes", "econ"], ["u1"], ["u1"],
          ["Obama"], ["Obamacare"], [], [], 0.5),
         # equal strings only (no Levenshtein jobs at all)
@@ -357,10 +354,6 @@ def test_global_dedup_scorer_bit_exact(spark):
 
     got = {
         r["ord_a"]: r["score"]
-        for r in _score_pairs_global_dedup(pairs).select("ord_a", "score").collect()
-    }
-    old = {
-        r["ord_a"]: r["score"]
         for r in pairs.withColumn(
             "score",
             _pair_score_udf(
@@ -374,5 +367,4 @@ def test_global_dedup_scorer_bit_exact(spark):
         kw_a, kw_b, ln_a, ln_b, en_a, en_b, ca, cb, ts = r
         want = claim_pair_score(kw_a, kw_b, ln_a, ln_b, en_a, en_b,
                                 ca, cb, text_sim=ts)
-        assert got[str(i)] == want, f"row {i}: jvm-dedup {got[str(i)]} != scalar {want}"
-        assert old[str(i)] == want, f"row {i}: batched {old[str(i)]} != scalar {want}"
+        assert got[str(i)] == want, f"row {i}: batched {got[str(i)]} != scalar {want}"

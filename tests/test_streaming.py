@@ -1,11 +1,18 @@
 """Streaming ingest: the stateless triple log drained via availableNow must
-be a subset of the batch result, and compaction must converge to the exact
-batch triple set (= oracle set)."""
+equal the batch pipeline's row-local families (a subset of its result),
+and compaction must converge to the exact batch triple set (= oracle
+set)."""
 
 import tempfile
 
 import pytest
 
+from claimskg_generator_spark.operators.mentions import (
+    review_and_body_mention_triples,
+)
+from claimskg_generator_spark.operators.row_triples import (
+    single_pass_row_triples,
+)
 from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline
 from claimskg_generator_spark.sources.synth import gen_rows
 from claimskg_generator_spark.streaming.ingest import (
@@ -34,10 +41,21 @@ def test_stream_then_compact_converges(spark, dirs):
     q.awaitTermination(300)
 
     log = spark.read.parquet(dirs["log"])
-    batch = ClaimsKGPipeline(spark).triples(spark.read.parquet(dirs["input"]))
+    pipe = ClaimsKGPipeline(spark)
+    batch = pipe.triples(spark.read.parquet(dirs["input"]))
     batch_set = {tuple(r) for r in batch.collect()}
     log_set = {tuple(r) for r in log.collect()}
-    # stateless families only -> strict subset (no keyword/static families)
+    # the log holds exactly the batch pipeline's row-local families over
+    # the same claims plan ...
+    cfg = pipe.config
+    claims = pipe.derived_claims(spark.read.parquet(dirs["input"]))
+    row_local = single_pass_row_triples(
+        claims, cfg.model_uri, cfg.include_body, cfg.threshold
+    ).unionByName(
+        review_and_body_mention_triples(claims, cfg.model_uri, cfg.threshold)
+    )
+    assert log_set == {tuple(r) for r in row_local.collect()}
+    # ... a strict subset of the batch (no keyword/static families)
     assert log_set and log_set < batch_set
 
     compacted = compact_triple_log(
